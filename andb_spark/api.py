@@ -13304,6 +13304,13 @@ class AnalyticsEngine:
                 set_sql = self._sub_outside_literals(
                     set_sql, "excluded.", f"{view}."
                 )
+                # a bare column means the EXISTING target row's value
+                # (Postgres/DuckDB); unqualified, it is ambiguous
+                # against the source view's same-named column
+                set_sql = _qualify_bare_columns(
+                    set_sql, target,
+                    [f.name for f in self._schema(target).fields],
+                )
                 clauses = (
                     f" when matched then update set {set_sql}" + clauses
                 )
@@ -15079,6 +15086,29 @@ def _blank_literals(s: str) -> str:
         lambda m: "'" + " " * (len(m.group(0)) - 2) + "'",
         s,
     )
+
+
+def _qualify_bare_columns(
+    text: str, qualifier: str, columns: list[str]
+) -> str:
+    """Prefix every bare reference to one of ``columns`` with
+    ``qualifier.``, outside string literals. Dotted names (``src.col``,
+    struct fields), quoted identifiers, function calls, lambda
+    parameters and typed-literal keywords (``date '...'``) stay as
+    written."""
+    if not columns:
+        return text
+    pat = re.compile(
+        r"(?<![\w.`\"])("
+        + "|".join(re.escape(c) for c in columns)
+        + r")\b(?![`\"]|\s*(?:\(|->|'))",
+        re.I,
+    )
+    out, last = [], 0
+    for m in pat.finditer(_blank_literals(text)):
+        out.append(text[last:m.start()] + f"{qualifier}.{m.group(1)}")
+        last = m.end()
+    return "".join(out) + text[last:]
 
 
 def _paren_depth_at(blanked: str, pos: int) -> int:

@@ -344,9 +344,19 @@ def minhash_lsh_pairs(
 
     Execution regimes (measured, not guessed; combinable):
 
-    - default (both False): pure lazy composition. Downstream consumers
-      re-evaluate shared subtrees, but all re-evaluations reuse the same
-      compiled codegen classes. At small corpus sizes the recompute is
+    - every regime: the returned pair frame is pinned with a LAZY
+      ``persist_tracked`` — the MLlib-style "cache the small midpoint,
+      never the corpus" pattern, bounded by the LSH candidate count.
+      Building it runs no jobs (EXPLAIN and the reuse advisor stay
+      execution-free); the first action computes and caches the pairs,
+      and every later consumer (the caller's collect, then
+      ``connected_components``, a survivors anti-join) reads the cache
+      instead of re-running signature → band → verify. The pin lasts
+      until ``caching.release_caches()`` (or the engine's per-statement
+      release); a released frame recomputes on its next action.
+    - default (both flags False): the pipeline under that pin is pure
+      lazy composition. Its internal re-evaluations reuse the same
+      compiled codegen classes; at small corpus sizes the recompute is
       cheaper than any materialization bookkeeping.
     - ``checkpoint_shingles``: cache the exploded (id, shingle) table
       once (LAZY persist — the first action computes it, later
@@ -380,7 +390,9 @@ def minhash_lsh_pairs(
         )
         df = df.join(cand_ids, df[id_col] == cand_ids["_id"], "left_semi")
         shingle_df = None  # df was restricted; recompute shingles on it
-    return jaccard_verify(df, cands, text_col, id_col, threshold, shingle_df)
+    return _persist_tracked(
+        jaccard_verify(df, cands, text_col, id_col, threshold, shingle_df)
+    )
 
 
 def band_table(
@@ -687,17 +699,24 @@ def connected_components(
     practice.
 
     Scale mechanics:
-    - ``edges`` is materialized once up front (localCheckpoint) — the
-      iteration must never re-evaluate an expensive upstream candidate
-      pipeline, and each round's result is checkpointed to truncate
-      the exponentially-growing lineage (on a cluster: checkpoint to
+    - ``edges`` is evaluated exactly once: its directed (src, dst)
+      projection is materialized up front (localCheckpoint), and the
+      symmetric edge set is a union of two scans of that checkpointed
+      leaf — so neither the iteration nor the two directions of the
+      union ever re-run an expensive upstream pair pipeline (a cached
+      input such as ``minhash_lsh_pairs``' pinned pairs is read once).
+      Each round's labels are checkpointed too, truncating the
+      exponentially-growing lineage (on a cluster: checkpoint to
       reliable storage instead).
     - Convergence is detected with a changed-label count — one extra
       action per round on the (small) label table, not on the corpus.
     """
-    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    und = und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    und = _checkpoint_tracked(und)
+    directed = _checkpoint_tracked(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    )
+    und = directed.unionAll(
+        directed.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     changed = 0  # defined even if max_iter <= 0 (for-else still fires)
     labels = _checkpoint_tracked(
         und.select(F.col("u").alias("node"))

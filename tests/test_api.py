@@ -1079,6 +1079,35 @@ def test_insert_on_conflict(spark, tmp_path):
     eng.close()
 
 
+def test_insert_on_conflict_bare_target_column_matches_duckdb(spark, tmp_path):
+    """A bare column in DO UPDATE SET is the existing target row's
+    value (Postgres/DuckDB); it must not be ambiguous against the
+    source batch's same-named column. Only bare references qualify:
+    excluded.*, string literals and function names stay as written."""
+    import duckdb
+
+    stmts = [
+        "create table t (id int primary key, touched int default 0,"
+        " note varchar)",
+        "insert into t values (1, 0, 'a'), (2, 7, 'b')",
+        "insert into t values (1, 5, 'x') on conflict (id)"
+        " do update set touched = touched + 1",
+        "insert into t values (2, 5, 'y'), (3, 4, 'z') on conflict (id)"
+        " do update set touched = touched + excluded.touched,"
+        " note = concat(note, ' touched ', excluded.note)",
+    ]
+    con = duckdb.connect()
+    eng = AnalyticsEngine(str(tmp_path / "whbare"), spark=spark)
+    for s in stmts:
+        con.execute(s)
+        eng.execute(s)
+    q = "select id, touched, note from t order by id"
+    expected = [tuple(r) for r in con.execute(q).fetchall()]
+    assert expected == [(1, 1, "a"), (2, 12, "b touched y"), (3, 4, "z")]
+    assert eng.execute(q).rows == expected
+    eng.close()
+
+
 def test_sql_rewrite_robustness(spark, tmp_path):
     """Hardening cases from the r6 review of the SQL-surface rewrite
     layer: keyword detection must respect string literals and

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from andb_spark import caching
 from andb_spark.operators import dedup as DD
 from andb_spark.operators import similarity as SIM
 from andb_spark.operators.asof import asof_join
@@ -901,6 +902,110 @@ def test_connected_components_transitive_closure(spark):
         (10, 10), (11, 10),
         (4, 4), (5, 4), (6, 4), (7, 4),
     }
+
+
+def _persistent_rdd_ids(spark):
+    return sorted(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; return (its result,
+    the number of jobs the group ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _near_dup_corpus(spark):
+    """Four clusters of three 24-word docs (each variant swaps one word
+    of its cluster's base text, Jaccard ~0.7) plus a fifth cluster of
+    three reversed word windows, each shifted by one word, which
+    overlap enough to pair up."""
+    words = [f"w{i}" for i in range(200)]
+    docs = []
+    for c in range(4):
+        base = words[c * 25:c * 25 + 24]
+        docs.append((c * 10 + 1, " ".join(base)))
+        for v in (1, 2):
+            alt = list(base)
+            alt[5 * v] = f"x{c}{v}"
+            docs.append((c * 10 + 1 + v, " ".join(alt)))
+    docs += [
+        (100 + i, " ".join(words[150 + i:174 + i][::-1])) for i in range(3)
+    ]
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def test_connected_components_checkpoints_released(spark):
+    from andb_spark.operators import dedup as DD
+
+    caching.release_caches()
+    before = _persistent_rdd_ids(spark)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
+    )
+    labels = {
+        (r["node"], r["component_id"])
+        for r in DD.connected_components(edges).collect()
+    }
+    assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    caching.release_caches()
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_minhash_lsh_pairs_pins_result_lazily(spark):
+    """The verified pairs are a lazy tracked persist: building runs no
+    jobs, release frees every block, and a released frame recomputes
+    the same rows instead of raising."""
+    caching.release_caches()
+    before = _persistent_rdd_ids(spark)
+    df = _near_dup_corpus(spark)
+    pairs, n_build = _jobs_in_group(
+        spark, "lsh_pin_build",
+        lambda: DD.minhash_lsh_pairs(
+            df, "text", "doc_id", checkpoint_shingles=True
+        ),
+    )
+    assert n_build == 0
+    assert pairs.is_cached
+    rows = sorted(tuple(r) for r in pairs.collect())
+    assert [r[:2] for r in rows] == [
+        (1, 2), (1, 3), (2, 3), (11, 12), (11, 13), (21, 22), (21, 23),
+        (31, 32), (31, 33), (32, 33), (100, 101), (100, 102), (101, 102),
+    ]
+    assert len(_persistent_rdd_ids(spark)) > len(before)
+    caching.release_caches()
+    assert _persistent_rdd_ids(spark) == before
+    assert sorted(tuple(r) for r in pairs.collect()) == rows
+
+
+def test_connected_components_reads_collected_pairs_once(spark):
+    """Job ceiling: components over an already-collected pair frame
+    must not re-run the signature -> band -> verify plan (once per side
+    of the symmetric union, 37 jobs here before the pairs were pinned
+    and the directed edges checkpointed). A ceiling that trips is a
+    regression to fix, not a number to raise."""
+    caching.release_caches()
+    pairs = DD.minhash_lsh_pairs(
+        _near_dup_corpus(spark), "text", "doc_id", checkpoint_shingles=True
+    )
+    pairs.collect()
+    labels, n_jobs = _jobs_in_group(
+        spark, "cc_after_pairs", lambda: DD.connected_components(pairs)
+    )
+    got = {(r["node"], r["component_id"]) for r in labels.collect()}
+    assert got == {
+        (n, c)
+        for c in (1, 11, 21, 31, 100)
+        for n in (c, c + 1, c + 2)
+    }
+    assert n_jobs <= 16, n_jobs
+    caching.release_caches()
 
 
 def test_approx_quantile_accuracy(spark, sf_dir):

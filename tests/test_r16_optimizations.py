@@ -60,23 +60,6 @@ def test_cache_mark_scopes_checkpoints(spark):
     caching.release_caches()
 
 
-def test_connected_components_checkpoints_released(spark):
-    from andb_spark.operators import dedup as DD
-
-    caching.release_caches()
-    before = _persistent_rdd_ids(spark)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
-    )
-    labels = {
-        (r["node"], r["component_id"])
-        for r in DD.connected_components(edges).collect()
-    }
-    assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    caching.release_caches()
-    assert _persistent_rdd_ids(spark) == before
-
-
 def test_stage_sizing_zero_target_disables(spark, tmp_path):
     """andb.stage_target_file_bytes = 0 must disable the sizing, not
     ZeroDivisionError every small write (ADVICE r15 #2)."""
