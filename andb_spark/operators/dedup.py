@@ -18,7 +18,7 @@ Design constraints honored here:
 - At 100 TB: the only shuffles are the groupBys on (doc, hash-slot) and
   the band-bucket self-join. Band signatures are high-entropy md5s ⇒
   near-uniform shuffle keys, no skew. Candidate verification joins only
-  the candidate pairs' shingle sets, not all pairs.
+  the candidate pairs' shingle arrays, not all pairs.
 """
 
 from __future__ import annotations
@@ -87,6 +87,31 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 _SPREAD_BYTES_PER_PARTITION = 64 * 1024
 
+# Logical operators that keep their child's partitioning, so an
+# explicit repartition below them still fixes the frame's width.
+_NARROW_NODES = ("Project", "Filter", "Generate")
+
+
+def _explicit_partitions(plan) -> int | None:
+    """Partition count a logical plan pins by construction, or None
+    when only execution would tell (a scan's split count, an AQE-
+    coalesced shuffle). Walks down through narrow operators to the
+    first node that decides the width: an explicit repartition(n), a
+    repartition by expression with an explicit n, or an RDD-backed
+    leaf (a checkpoint) whose partitions already exist."""
+    while True:
+        name = plan.nodeName()
+        if name == "Repartition" and plan.shuffle():
+            return int(plan.numPartitions())
+        if name == "RepartitionByExpression":
+            n = plan.optNumPartitions()
+            return int(n.get()) if n.isDefined() else None
+        if name == "LogicalRDD":
+            return int(plan.rdd().getNumPartitions())
+        if name not in _NARROW_NODES:
+            return None
+        plan = plan.child()
+
 
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Fan a narrow scan out before a CPU-bound per-row stage, with a
@@ -97,11 +122,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     at the SCAN's parallelism — and a small corpus is often one parquet
     row group, so the whole stage lands on ONE core while the rest
     idle (stage-level profile, SCALE.md §7 "Minhash drift, root-caused":
-    1-task 1.1–1.5 s stages under d_minhash_lsh at sf0.1). When the
-    scan has fewer partitions than default parallelism, pay one cheap
-    shuffle of the raw rows to spread the compute; at 100 TB the scan
-    already carries thousands of splits and this returns the frame
-    untouched — no shuffle added.
+    1-task 1.1–1.5 s stages under d_minhash_lsh at sf0.1).
 
     Width: one partition per ~64 KiB of the optimizer's input-size
     estimate, clamped to [1, defaultParallelism]. The earlier
@@ -113,15 +134,27 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     best-of-3, and width 32's in-bench number degraded to 11.9 s under
     a loaded heap). The explicit repartition(N) is exempt from AQE
     coalescing, so the fan-out survives the small-data estimate that
-    caused it."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
+    caused it.
+
+    Decision rule, from planning-time information only — this runs NO
+    jobs (asking ``df.rdd`` for its partition count executes every
+    shuffle stage upstream under AQE, which cost a join-derived input
+    two jobs and ~0.5–0.9 s while the caller was merely building):
+
+    - the frame is returned untouched when its width is 1, when the
+      plan pins an explicit partition count (a repartition(n) or a
+      checkpoint, under narrow operators) of at least the width, or
+      when the estimate alone spans ``defaultParallelism`` full file
+      splits (``spark.sql.files.maxPartitionBytes`` each) — at 100 TB
+      the scan already carries thousands of splits, and no shuffle is
+      added;
+    - otherwise it is repartitioned to the width — one cheap shuffle
+      of the raw rows to spread the compute."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().optimizedPlan()
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = int(plan.stats().sizeInBytes())
     except Exception:
         est = 0
     if est <= 0:  # no usable estimate: the old conservative behavior
@@ -130,19 +163,34 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         width = max(
             1, min(target, -(-est // _SPREAD_BYTES_PER_PARTITION))
         )
-    if df.rdd.getNumPartitions() < width:
-        return df.repartition(width)
-    return df
+    if width <= 1:
+        return df
+    pinned = _explicit_partitions(plan)
+    if pinned is not None:
+        return df if pinned >= width else df.repartition(width)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if est >= target * int(split):
+        return df
+    return df.repartition(width)
 
 
-def exploded_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, shingle) rows — the shared input of the signature and
-    verification stages. Input is spread to full parallelism first
-    (the downstream per-shingle hashing dominates; see
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, sh array<string>), one row per document. A document with
+    fewer than n tokens has an empty array, explodes to no shingle,
+    gets no signature and so is never a candidate. (No size filter
+    here: Catalyst would push it below spread_small_input's exchange
+    and shingle every document in the scan's tasks.)"""
+    return df.select(F.col(id_col), shingles(text_col).alias("sh"))
+
+
+def shingle_arrays(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Per-document shingle arrays (id, sh) — the one shingle
+    intermediate of the LSH pipeline: the signature stage explodes it,
+    the verify stage intersects it. One row per document, so pinning
+    it costs the corpus' row count, not its shingle count. Input is
+    spread first (the per-shingle hashing downstream dominates; see
     spread_small_input)."""
-    return spread_small_input(df).select(
-        F.col(id_col), F.explode(shingles(text_col)).alias("shingle")
-    )
+    return _doc_shingles(spread_small_input(df), text_col, id_col)
 
 
 def minhash_signatures(
@@ -150,28 +198,24 @@ def minhash_signatures(
     text_col: str,
     id_col: str,
     num_hashes: int = 8,
-    shingle_df: DataFrame | None = None,
+    arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document MinHash signature: (id, sig array<string>) where
     sig[h] = min over shingles of md5(h || '|' || shingle), compared as
     fixed-width hex strings.
 
-    Computed as a pure per-row map (transform + array_min per hash slot)
-    — NO explode, NO shuffle. At 100 TB the signature stage is
-    embarrassingly parallel; the first shuffle in the LSH pipeline is
-    the band-bucket join. (An earlier explode(shingle)×explode(h)
-    formulation shuffled num_hashes×|shingles| rows — 8M at sf0.1 — and
-    was ~10× slower end-to-end.)"""
-    # explode once, then num_hashes codegen'd min-aggregates: the md5s
-    # run inside whole-stage codegen (a higher-order-function fold is
-    # interpreted per element and benches ~6× slower), and partial
-    # aggregation means the shuffle carries one row per (doc, partition),
-    # not per (doc, shingle, hash).
-    sh = (
-        shingle_df
-        if shingle_df is not None
-        else exploded_shingles(df, text_col, id_col)
-    )
+    ``arrays``: a (pinned) ``shingle_arrays`` table of ``df`` to explode
+    instead of re-shingling the text.
+
+    Computed as one explode of the per-document shingle arrays followed
+    by num_hashes codegen'd min-aggregates: the md5s run inside
+    whole-stage codegen (a higher-order-function fold is interpreted
+    per element and benches ~6× slower), and partial aggregation means
+    the shuffle carries one row per (doc, partition), not per (doc,
+    shingle, hash). (An earlier explode(shingle)×explode(h) formulation
+    shuffled num_hashes×|shingles| rows — 8M at sf0.1 — and was ~10×
+    slower end-to-end.)"""
+    sh = arrays if arrays is not None else shingle_arrays(df, text_col, id_col)
     aggs = [
         F.min(
             F.md5(F.concat_ws("|", F.lit(h), F.col("shingle")))
@@ -179,7 +223,8 @@ def minhash_signatures(
         for h in range(num_hashes)
     ]
     return (
-        sh.groupBy(id_col)
+        sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
+        .groupBy(id_col)
         .agg(*aggs)
         .select(
             F.col(id_col),
@@ -232,13 +277,15 @@ def lsh_bands(
 def lsh_candidate_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     """Band buckets → distinct candidate pairs (id_a < id_b).
 
-    Formulated as a bucket self-join: both sides re-evaluate the band
-    pipeline (Spark shares no subtrees across join inputs), but they
-    share the *compiled* codegen classes, and measured cold end-to-end
-    this beats single-evaluation groupBy+collect_list+pair-explode
-    formulations, whose extra plan shapes cost more in Janino/JIT
-    compilation than the recompute costs in data. A bucket of size k
-    yields k² join rows — identical-signature skew is inherent to LSH
+    Formulated as a bucket self-join. Spark shares no subtrees across
+    join inputs, so each side evaluates ``bands`` on its own: pass
+    bands over PINNED signatures (as minhash_lsh_pairs does) and both
+    sides read one cached evaluation, leaving only the per-row band
+    fold duplicated. Measured cold end-to-end the self-join beats
+    single-evaluation groupBy+collect_list+pair-explode formulations,
+    whose extra plan shapes cost more in Janino/JIT compilation than
+    the duplicated fold costs in data. A bucket of size k yields k²
+    join rows — identical-signature skew is inherent to LSH
     candidates, not to this plan; AQE skew-join splits oversized
     buckets at scale."""
     a = bands.select(
@@ -261,60 +308,44 @@ def jaccard_verify(
     text_col: str,
     id_col: str,
     threshold: float,
-    shingle_df: DataFrame | None = None,
+    arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs only (never all pairs).
     Returns (id_a, id_b, jaccard) with jaccard >= threshold, rounded to
     6 decimals for cross-engine stability.
 
-    ``candidates`` is referenced three times here (two id projections +
-    the intersection join) and the shingle explode three times; Spark
-    re-evaluates each reference. Callers whose candidate pipeline is
-    expensive relative to plan compilation should pass a persisted
-    ``candidates`` and a pre-restricted ``df`` (see minhash_lsh_pairs
-    ``materialize=True``)."""
-    sh = (
-        shingle_df.withColumnRenamed(id_col, "_id")
-        if shingle_df is not None
-        else df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(shingles(text_col)).alias("shingle"),
+    Each candidate pair is joined to both documents' shingle arrays
+    and scored by array intersection: |A∩B| = size(array_intersect)
+    (the arrays are distinct by construction), |A| and |B| their
+    sizes — no shingle-level join, no per-pair regroup, no separate
+    size aggregation. ``arrays`` is a (pinned) ``shingle_arrays``
+    table covering ``df``'s candidate documents; without it the arrays
+    are derived from ``df`` here, once per join side."""
+    sh = arrays if arrays is not None else _doc_shingles(df, text_col, id_col)
+    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    counted = (
+        candidates.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
         )
     )
-    sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sh_a = sh.select(F.col("_id").alias("id_a"), F.col("shingle"))
-    sh_b = sh.select(F.col("_id").alias("id_b"), F.col("shingle"))
-    inter = (
-        candidates.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _score_jaccard(inter, sizes, threshold)
+    return _score_jaccard(counted, threshold)
 
 
-def _score_jaccard(
-    inter: DataFrame, sizes: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail of every exact-Jaccard scorer: join per-side sizes
-    onto (id_a, id_b, n_inter) counts, derive round(|∩|/|∪|, 6), and
+def _score_jaccard(counted: DataFrame, threshold: float) -> DataFrame:
+    """Shared tail of every exact-Jaccard scorer: from (id_a, id_b,
+    n_inter, n_a, n_b) counts derive round(|∩|/|∪|, 6) and
     threshold-filter. ONE copy of the rounding convention the DuckDB
     oracles restate — jaccard_verify and ngram_jaccard_pairs must
     never drift apart on it."""
     return (
-        inter.join(
-            sizes.select(
-                F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.select(
-                F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")
-            ),
-            "id_b",
-        )
-        .withColumn(
+        counted.withColumn(
             "jaccard",
             F.round(
                 F.col("n_inter")
@@ -342,56 +373,56 @@ def minhash_lsh_pairs(
     """Full MinHash→LSH→verify pipeline: near-duplicate pairs with exact
     Jaccard >= threshold among LSH candidates.
 
-    Execution regimes (measured, not guessed; combinable):
+    Execution regimes (measured, not guessed; combinable). Building the
+    pipeline runs no jobs in any regime — every pin below is a LAZY
+    ``persist_tracked``, so EXPLAIN and the reuse advisor stay
+    execution-free; the first action computes and caches each pinned
+    frame, and later references read the cache. Pins last until
+    ``caching.release_caches()`` (or the engine's per-statement
+    release); a released frame recomputes on its next action.
 
-    - every regime: the returned pair frame is pinned with a LAZY
-      ``persist_tracked`` — the MLlib-style "cache the small midpoint,
-      never the corpus" pattern, bounded by the LSH candidate count.
-      Building it runs no jobs (EXPLAIN and the reuse advisor stay
-      execution-free); the first action computes and caches the pairs,
-      and every later consumer (the caller's collect, then
+    - every regime: the per-document signature frame is pinned, so the
+      two sides of the band self-join (lsh_candidate_pairs) read one
+      signature evaluation and one signature shuffle; and the returned
+      pair frame is pinned — the MLlib-style "cache the small midpoint,
+      never the corpus" pattern, bounded by the LSH candidate count —
+      so every later consumer (the caller's collect, then
       ``connected_components``, a survivors anti-join) reads the cache
-      instead of re-running signature → band → verify. The pin lasts
-      until ``caching.release_caches()`` (or the engine's per-statement
-      release); a released frame recomputes on its next action.
-    - default (both flags False): the pipeline under that pin is pure
-      lazy composition. Its internal re-evaluations reuse the same
-      compiled codegen classes; at small corpus sizes the recompute is
-      cheaper than any materialization bookkeeping.
-    - ``checkpoint_shingles``: cache the exploded (id, shingle) table
-      once (LAZY persist — the first action computes it, later
-      references read the cache; construction runs no jobs, so EXPLAIN
-      and the reuse advisor stay execution-free) and feed it to BOTH
-      the signature and the verification stages — tokenize/shingle runs
-      once instead of ~4×. Measured at sf0.1: 2.5s lazy → 1.7s persist
-      (an earlier eager localCheckpoint variant was 2.5s — serializing
-      the corpus-sized table up front cost more than the recompute it
-      saved). The shingle table is corpus-sized, so this is the
-      mid-scale regime: executor memory/disk can hold it.
+      instead of re-running signature → band → verify.
+    - default (both flags False): shingles are derived from the text
+      twice — once for the signatures, once for the verify join.
+    - ``checkpoint_shingles``: pin the per-document shingle arrays
+      (id, sh) and feed them to BOTH the signature stage (which
+      explodes them) and the verify stage (which intersects them):
+      tokenize/shingle runs once. Pin the arrays, never their explode:
+      one row per document instead of one per shingle (~100× fewer
+      rows to cache and to race concurrent cache-fill jobs over).
     - ``materialize``: persist the candidate set (tiny relative to the
-      corpus) and restrict verification to candidate documents via a
-      semi-join — the MLlib-style "cache the small midpoint, never the
-      corpus" pattern. At 100 TB, where one corpus-wide signature pass
-      costs hours and the shingle table is too big to store, this caps
-      signature passes at one while materializing only candidate ids.
+      corpus) and, unless the arrays are pinned already, restrict
+      verification to candidate documents via a semi-join. At 100 TB,
+      where one corpus-wide pass costs hours and the shingle arrays are
+      too big to store, this caps corpus shingling at the signature
+      pass while materializing only candidate ids.
     """
-    shingle_df = None
+    arrays = None
     if checkpoint_shingles:
-        shingle_df = _persist_tracked(exploded_shingles(df, text_col, id_col))
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_df)
+        arrays = _persist_tracked(shingle_arrays(df, text_col, id_col))
+    sigs = _persist_tracked(
+        minhash_signatures(df, text_col, id_col, num_hashes, arrays)
+    )
     bands = lsh_bands(sigs, id_col, num_hashes, rows_per_band)
     cands = lsh_candidate_pairs(bands, id_col)
     if materialize:
         cands = _persist_tracked(cands)
-        cand_ids = (
-            cands.select(F.col("id_a").alias("_id"))
-            .unionAll(cands.select(F.col("id_b").alias("_id")))
-            .distinct()
-        )
-        df = df.join(cand_ids, df[id_col] == cand_ids["_id"], "left_semi")
-        shingle_df = None  # df was restricted; recompute shingles on it
+        if arrays is None:
+            cand_ids = (
+                cands.select(F.col("id_a").alias("_id"))
+                .unionAll(cands.select(F.col("id_b").alias("_id")))
+                .distinct()
+            )
+            df = df.join(cand_ids, df[id_col] == cand_ids["_id"], "left_semi")
     return _persist_tracked(
-        jaccard_verify(df, cands, text_col, id_col, threshold, shingle_df)
+        jaccard_verify(df, cands, text_col, id_col, threshold, arrays)
     )
 
 
@@ -442,12 +473,12 @@ def incremental_minhash_pairs(
 
     ``materialize``: lazily composed, the candidate pairs feed both the
     history restriction and the verify join, and the verify stage
-    references its shingle table three ways (sizes + both pair sides) —
-    the executed plan carries ~25 corpus scans (exchange reuse catches
-    only a few; AQE hides the recompute locally where stage overhead
-    dominates, but 25 scans of a 100 TB corpus is the whole game at
-    scale). With ``materialize`` the tiny candidate pair set and the
-    increment-plus-hits shingle table are lazily persisted: the first
+    derives its shingle arrays once per pair side — the executed plan
+    carries many corpus scans (exchange reuse catches only a few; AQE
+    hides the recompute locally where stage overhead dominates, but
+    repeated scans of a 100 TB corpus are the whole game at scale).
+    With ``materialize`` the tiny candidate pair set and the
+    increment-plus-hits shingle arrays are lazily persisted: the first
     action computes and caches them, capping corpus passes at three
     (two band tables + one verify shingle) while construction itself
     runs no jobs — EXPLAIN and the reuse advisor stay execution-free
@@ -456,7 +487,7 @@ def incremental_minhash_pairs(
     cost, dominates there; the flag is about the scan multiplicity.
 
     ``eager`` (only meaningful with ``materialize``): materialize the
-    candidate pairs and the verify shingle table via an EAGER
+    candidate pairs and the verify shingle arrays via an EAGER
     ``localCheckpoint`` instead of a lazy persist. The checkpoint
     TRUNCATES the plan (guide §3.3): downstream references read a
     cached leaf instead of carrying the full replicated band-pipeline
@@ -512,16 +543,12 @@ def incremental_minhash_pairs(
         cands.select(F.col("id_a").alias(id_col)).distinct(), id_col, "left_semi"
     ).join(new_df.select(id_col), id_col, "left_anti")
     verify_input = hist_hit.unionByName(new_df)
-    shingle_df = None
+    arrays = None
     if materialize:
-        sh = exploded_shingles(verify_input, text_col, id_col)
-        shingle_df = (
-            _checkpoint_tracked(sh)
-            if eager
-            else _persist_tracked(sh)
-        )
+        sh = shingle_arrays(verify_input, text_col, id_col)
+        arrays = _checkpoint_tracked(sh) if eager else _persist_tracked(sh)
     return jaccard_verify(
-        verify_input, cands, text_col, id_col, threshold, shingle_df
+        verify_input, cands, text_col, id_col, threshold, arrays
     )
 
 
@@ -676,7 +703,14 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _score_jaccard(pairs, sizes, threshold)
+    counted = pairs.join(
+        sizes.select(F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")),
+        "id_a",
+    ).join(
+        sizes.select(F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")),
+        "id_b",
+    )
+    return _score_jaccard(counted, threshold)
 
 
 def connected_components(

@@ -289,19 +289,24 @@ def d_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The exact ground truth stays a lazy persist: it feeds n_exact
     # and the hit semi-join concurrently, and an eager barrier there
     # SERIALIZED the exact and band pipelines (measured slower).
-    # The always-true nondeterministic conjunct stops Catalyst from
+    # The always-true nondeterministic guard stops Catalyst from
     # pushing the (expensive — one md5 per shingle) filter BELOW the
     # fan-out exchange: deterministic predicates commute with
     # repartition, and pushed down the whole sample pass runs in the
     # scan's single task again (measured 2.3 s → 0.8 s with the
-    # guard; 856 rows either way — the conjunct never changes the
-    # predicate's value, so the result set is deterministic).
+    # guard; 856 rows either way — the guard never changes the
+    # predicate's value, so the result set is deterministic). The
+    # guard wraps the cutoff in ONE expression: filter pushdown splits
+    # a conjunction and moves every deterministic conjunct anyway. It
+    # is spark_partition_id() >= 0, not rand() >= -1: OptimizeRand
+    # folds a rand() comparison against a constant outside [0, 1) to
+    # TRUE (pinned in test_plans.py).
     d = DD._checkpoint_tracked(
         DD.spread_small_input(d_all)
         .withColumn(
             "_mh", F.array_min(F.transform(DD.shingles("text"), F.md5))
         )
-        .filter((F.col("_mh") < "0100") & (F.rand() >= F.lit(-1.0)))
+        .filter(F.when(F.spark_partition_id() >= 0, F.col("_mh") < "0100"))
         .select("doc_id", "text")
     )
     exact = DD._persist_tracked(

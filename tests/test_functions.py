@@ -50,6 +50,32 @@ def test_tokens_and_counts(spark):
     assert out[1]["n"] == 0
 
 
+def test_tokens_matches_filter_lambda_form(spark):
+    """tokens() is array_remove over the whitespace split; it must agree
+    with the filter(x -> x != '') form it replaced on every edge:
+    NULL stays NULL, blank and whitespace-only text yield no tokens."""
+    texts = [
+        None, "", " ", "\t\n", "a", "  a  b   c ", "\ta\nb\t\tc\n",
+        " \n lead and trail \t", "mixed\t \n\r\fspaces\x0bhere",
+        "naïve café — 東京 ümlaut", "ß\u00a0nbsp kept",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, t string")
+    split = F.split(F.col("t"), r"\s+")
+    rows = df.select(
+        "i",
+        TX.tokens("t").alias("new"),
+        F.filter(split, lambda x: x != F.lit("")).alias("old"),
+        TX.token_count("t").alias("n"),
+    ).orderBy("i").collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["new"] == r["old"], (texts[r["i"]], r["new"], r["old"])
+        assert r["n"] == (None if r["old"] is None else len(r["old"]))
+    assert rows[0]["new"] is None
+    assert [r["new"] for r in rows[1:4]] == [[], [], []]
+
+
 def test_text_scores_bounded(spark):
     df = spark.createDataFrame(
         [("the cat sat on the mat and it is fine",), ("zzz qqq xxx!!!",)], ["t"]

@@ -5,16 +5,23 @@ constructs operators directly; we do the same with DataFrames)."""
 from __future__ import annotations
 
 import datetime
+import os
+import random
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from andb_spark import caching
+from andb_spark.catalog import load_table
 from andb_spark.operators import dedup as DD
 from andb_spark.operators import similarity as SIM
 from andb_spark.operators.asof import asof_join
 from andb_spark.operators.multimodal import binarize, decode_image, extract_image_meta
+
+from conftest import SF_SMOKE as SF001
 
 
 def test_shingles_basic(spark):
@@ -982,6 +989,171 @@ def test_minhash_lsh_pairs_pins_result_lazily(spark):
     caching.release_caches()
     assert _persistent_rdd_ids(spark) == before
     assert sorted(tuple(r) for r in pairs.collect()) == rows
+
+
+def test_minhash_lsh_pairs_build_runs_no_jobs_over_join_input(spark, sf_dir):
+    """Building over a join-derived input (the dedup pipeline's
+    kept ⋈ exact_dedup shape) must not execute the input: the fan-out
+    width is decided from planning-time information only (asking the
+    frame for its partition count ran every upstream shuffle stage)."""
+    from andb_spark.functions.text import token_count
+
+    caching.release_caches()
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    docs = load_table(spark, sf01, "documents")
+    kept = docs.where(token_count("text") >= 3)
+    uniq = kept.join(DD.exact_dedup(kept, "text", "doc_id"), "doc_id",
+                     "left_semi")
+    _, n_build = _jobs_in_group(
+        spark, "lsh_join_build",
+        lambda: DD.minhash_lsh_pairs(
+            uniq, "text", "doc_id", checkpoint_shingles=True
+        ),
+    )
+    assert n_build == 0
+    caching.release_caches()
+
+
+def test_minhash_lsh_pairs_first_collect_job_ceiling(spark):
+    """Job ceiling: the first collect evaluates each per-document
+    intermediate (shingle arrays, signatures) once — 17 jobs here when
+    the exploded shingle table was pinned and both sides of the band
+    self-join re-ran the signature aggregate. A ceiling that trips is a
+    regression to fix, not a number to raise."""
+    caching.release_caches()
+    pairs = DD.minhash_lsh_pairs(
+        _near_dup_corpus(spark), "text", "doc_id", checkpoint_shingles=True
+    )
+    rows, n_jobs = _jobs_in_group(spark, "lsh_first_collect", pairs.collect)
+    assert len(rows) == 13
+    assert n_jobs <= 9, n_jobs
+    caching.release_caches()
+
+
+_JAVA_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")  # java.util.regex \s
+
+
+def _py_shingles(text: str, n: int = 3) -> set[str]:
+    w = [t for t in _JAVA_SPACE.split(text) if t]
+    return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+
+def _py_jaccard(a: str, b: str) -> float:
+    """Exact shingle-set Jaccard, rounded half-up to 6 places (the
+    Spark ``round`` convention)."""
+    sa, sb = _py_shingles(a), _py_shingles(b)
+    j = Decimal(len(sa & sb)) / Decimal(len(sa | sb))
+    return float(j.quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def _jaccard_corpus(seed: int) -> dict[int, str]:
+    """Seeded near-dup clusters written with mixed whitespace, with
+    repeated n-grams inside documents, plus documents too short to
+    shingle (0-2 tokens) and blank ones."""
+    rng = random.Random(seed)
+    seps = [" ", "  ", "\t", "\n", " \t\n", "\r\n"]
+
+    def render(words):
+        body = "".join(w + rng.choice(seps) for w in words)
+        return rng.choice(["", " ", "\t", "\n "]) + body
+
+    docs, i = {}, 1
+    for c in range(8):
+        vocab = [f"c{c}w{k}" for k in range(6)]
+        base = [rng.choice(vocab) for _ in range(18)]
+        base += base[:6]  # a repeated run: duplicate n-grams
+        for _ in range(4):
+            words = list(base)
+            for _ in range(rng.randint(0, 3)):
+                words[rng.randrange(len(words))] = f"e{rng.randrange(50)}"
+            docs[i] = render(words)
+            i += 1
+    for short in ([], ["a"], ["a", "b"], ["a", "b"]):
+        docs[i] = render(short)
+        i += 1
+    docs[i] = " \t\n "
+    return docs
+
+
+def test_lsh_verify_matches_python_exact_jaccard(spark):
+    """Differential: every verified pair's jaccard, from both LSH
+    builders and every verify regime, equals Python's exact
+    shingle-set Jaccard rounded to 6 places."""
+    docs = _jaccard_corpus(20261017)
+    df = spark.createDataFrame(sorted(docs.items()), "doc_id long, text string")
+
+    def check(frame):
+        rows = sorted(tuple(r) for r in frame.collect())
+        assert rows, "the seeded corpus must yield near-dup pairs"
+        for a, b, j in rows:
+            assert j == _py_jaccard(docs[a], docs[b]), (a, b, j)
+            assert j >= 0.5
+        caching.release_caches()
+        return rows
+
+    caching.release_caches()
+    results = [
+        check(DD.minhash_lsh_pairs(df, "text", "doc_id", **kw))
+        for kw in ({}, {"checkpoint_shingles": True}, {"materialize": True})
+    ]
+    assert results[0] == results[1] == results[2]
+    hist = df.filter(F.col("doc_id") % 2 == 0)
+    new = df.filter(F.col("doc_id") % 2 == 1)
+    inc = [
+        check(DD.incremental_minhash_pairs(hist, new, "text", "doc_id", **kw))
+        for kw in (
+            {}, {"materialize": True}, {"materialize": True, "eager": True},
+        )
+    ]
+    assert inc[0] == inc[1] == inc[2]
+
+
+def test_spread_width_is_size_derived_and_bounded(spark):
+    d = load_table(spark, SF001, "documents")
+    target = spark.sparkContext.defaultParallelism
+    out = DD.spread_small_input(d)
+    width = out.rdd.getNumPartitions()
+    # a ~64 KiB fixture must not fan out to the full core count —
+    # the r15 regression was 32 near-empty tasks on sub-MB input
+    assert 1 <= width <= max(2, target // 4)
+
+
+def test_spread_keeps_wide_input_untouched(spark):
+    d = load_table(spark, SF001, "documents").repartition(64)
+    out = DD.spread_small_input(d)
+    # already at/above parallelism: no extra shuffle is added
+    assert out is d
+
+
+def test_spread_results_unchanged(spark):
+    d = load_table(spark, SF001, "documents")
+    pairs = DD.minhash_lsh_pairs(
+        d, "text", "doc_id", num_hashes=8, rows_per_band=2, threshold=0.5
+    )
+    direct = (
+        d.select(
+            "doc_id", F.explode(DD.shingles("text")).alias("shingle")
+        )
+        .groupBy("doc_id")
+        .count()
+        .count()
+    )
+    # the width choice must not change WHAT is computed, only where
+    assert pairs.columns == ["id_a", "id_b", "jaccard"]
+    assert direct == d.filter(F.size(DD.shingles("text")) > 0).count()
+
+
+def test_recall_audit_sample_pass_is_parallel(spark):
+    """The recall audit's corpus-wide sample pass must not run at
+    1-task scan parallelism (the r15 finding: one 1.1 s task while 31
+    cores idle) — spread_small_input must widen it whenever the
+    size-derived width exceeds the scan's split count (sf0.1's ~600
+    KiB documents table → ~10 partitions at 64 KiB each; sf0.01 is
+    under one 64 KiB unit and correctly stays at width 1)."""
+    d = load_table(spark, "/root/testdata/sf0.1", "documents")
+    assert d.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    out = DD.spread_small_input(d)
+    assert out.rdd.getNumPartitions() > 1
 
 
 def test_connected_components_reads_collected_pairs_once(spark):

@@ -12,6 +12,7 @@ They read the executed plan AFTER running the query so AQE's final
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -358,6 +359,42 @@ def test_lsh_and_rerank_topk_are_shuffle_free(spark, sf_dir):
         assert "Exchange hashpartitioning" not in plan, (name, plan)
         assert "Exchange rangepartitioning" not in plan, (name, plan)
         assert "CartesianProduct" not in plan, (name, plan)
+
+
+def test_recall_audit_sample_filter_stays_above_spread(
+    spark, sf_dir, monkeypatch
+):
+    """d_lsh_recall_audit's sample cutoff (one md5 per shingle) must be
+    evaluated ABOVE the fan-out exchange spread_small_input adds, with
+    its always-true guard, and never pushed into the scan — pushed
+    below, the whole sample pass runs in the scan's single task (r15:
+    2.3 s → 0.8 s at sf0.1). Only sf0.1 is wide enough to fan out; the
+    sample frame is captured before its eager checkpoint truncates the
+    plan."""
+    from andb_spark import caching
+    from andb_spark.operators import dedup as DD
+
+    sampled = []
+    monkeypatch.setattr(
+        DD, "_checkpoint_tracked",
+        lambda df, eager=True: sampled.append(df) or df,
+    )
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    QUERIES["d_lsh_recall_audit"](spark, sf01)
+    caching.release_caches()
+    lines = (
+        sampled[0]._jdf.queryExecution().executedPlan().toString()
+        .splitlines()
+    )
+    spread = [i for i, ln in enumerate(lines) if "REPARTITION_BY_NUM" in ln]
+    cutoff = [i for i, ln in enumerate(lines) if "0100" in ln]
+    assert len(spread) == 1, lines
+    assert len(cutoff) == 1, lines
+    assert cutoff[0] < spread[0], lines  # printed above = runs after
+    assert "Filter" in lines[cutoff[0]]
+    assert "SPARK_PARTITION_ID()" in lines[cutoff[0]]
+    scan = [ln for ln in lines if "FileScan" in ln]
+    assert scan and "DataFilters: []" in scan[0], scan
 
 
 def test_bm25_broadcasts_corpus_stats(spark, sf_dir):

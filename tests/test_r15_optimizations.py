@@ -1,7 +1,8 @@
 """Focused tests for the r15 optimization-round internals: the
-size-derived fan-out width, the fixture attach memo (including the
-correctness-critical dir-change rebind), and the per-session function
-registration."""
+fixture attach memo (including the correctness-critical dir-change
+rebind), the eager incremental-MinHash regime, staged-write sizing,
+and the per-session function registration. The size-derived fan-out
+width tests live with the dedup operators in test_operators.py."""
 
 from __future__ import annotations
 
@@ -19,41 +20,6 @@ SF01 = "/root/testdata/sf0.01"
 @pytest.fixture(scope="module")
 def spark():
     return build_session("test_r15_opt")
-
-
-def test_spread_width_is_size_derived_and_bounded(spark):
-    d = load_table(spark, SF001, "documents")
-    target = spark.sparkContext.defaultParallelism
-    out = DD.spread_small_input(d)
-    width = out.rdd.getNumPartitions()
-    # a ~64 KiB fixture must not fan out to the full core count —
-    # the r15 regression was 32 near-empty tasks on sub-MB input
-    assert 1 <= width <= max(2, target // 4)
-
-
-def test_spread_keeps_wide_input_untouched(spark):
-    d = load_table(spark, SF001, "documents").repartition(64)
-    out = DD.spread_small_input(d)
-    # already at/above parallelism: no extra shuffle is added
-    assert out is d
-
-
-def test_spread_results_unchanged(spark):
-    d = load_table(spark, SF001, "documents")
-    pairs = DD.minhash_lsh_pairs(
-        d, "text", "doc_id", num_hashes=8, rows_per_band=2, threshold=0.5
-    )
-    direct = (
-        d.select(
-            "doc_id", F.explode(DD.shingles("text")).alias("shingle")
-        )
-        .groupBy("doc_id")
-        .count()
-        .count()
-    )
-    # the width choice must not change WHAT is computed, only where
-    assert pairs.columns == ["id_a", "id_b", "jaccard"]
-    assert direct == d.filter(F.size(DD.shingles("text")) > 0).count()
 
 
 def test_register_tables_rebinds_on_dir_change(spark):
@@ -97,19 +63,6 @@ def test_incremental_minhash_eager_matches_lazy(spark):
         ).collect()
     )
     assert lazy == eager
-
-
-def test_recall_audit_sample_pass_is_parallel(spark):
-    """The recall audit's corpus-wide sample pass must not run at
-    1-task scan parallelism (the r15 finding: one 1.1 s task while 31
-    cores idle) — spread_small_input must widen it whenever the
-    size-derived width exceeds the scan's split count (sf0.1's ~600
-    KiB documents table → ~10 partitions at 64 KiB each; sf0.01 is
-    under one 64 KiB unit and correctly stays at width 1)."""
-    d = load_table(spark, "/root/testdata/sf0.1", "documents")
-    assert d.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    out = DD.spread_small_input(d)
-    assert out.rdd.getNumPartitions() > 1
 
 
 def test_staged_write_output_sizing(spark, tmp_path):
